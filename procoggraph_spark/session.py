@@ -6,6 +6,16 @@ partition count (match cores, not the 200 default) and AQE. The same
 builder is correct on a real cluster: AQE re-plans partition counts and
 skew joins at runtime, so the static settings are starting points, not
 load-bearing constants.
+
+The driver heap (``spark.driver.memory``) is sized to the host: half of
+the memory this process may use (physical memory, or the cgroup limit
+when that is a number and lower), capped at 16 GB, so hosts with 32 GB
+or more get 16g. The other half is for the JVM's off-heap memory, the
+driver's Python process and one Python worker per core. G1 lets the old
+generation grow toward the ceiling before collecting it, so a ceiling
+near the host's whole memory gets a long-lived session killed by the
+kernel. ``SPARK_GRAFT_DRIVER_MEM`` (e.g. ``4g``) overrides the derived
+value; an explicit ``extra_conf`` entry still wins over both.
 """
 
 from __future__ import annotations
@@ -13,6 +23,42 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_DRIVER_HEAP_CAP = 16 << 30
+# cgroup v2, then v1; v1 reports "no limit" as a huge number
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _physical_memory_bytes() -> int:
+    return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+
+
+def _memory_limit_bytes() -> int:
+    """Memory this process may use: physical memory, or a numeric
+    cgroup limit when it is lower (``max`` means no limit)."""
+    limit = _physical_memory_bytes()
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limit = min(limit, int(raw))
+    return limit
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` for this host: ``SPARK_GRAFT_DRIVER_MEM``
+    when set, else half of :func:`_memory_limit_bytes` capped at 16g."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    mb = min(_memory_limit_bytes() // 2, _DRIVER_HEAP_CAP) >> 20
+    return f"{mb >> 10}g" if mb % 1024 == 0 else f"{mb}m"
 
 
 def get_spark(
@@ -44,7 +90,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # managed-table home for the bucketed node/edge layout
         .config(
@@ -71,7 +117,7 @@ def get_spark(
         # Long-lived sessions (the driver runs dozens of queries in one)
         # degrade set-heavy aggregations 2-5x as dereferenced shuffle /
         # broadcast state accumulates: the ContextCleaner only reclaims
-        # it after a driver GC, and an idle 16 GB heap can go 30+ min
+        # it after a driver GC, and an idle multi-GB heap can go 30+ min
         # (the default periodicGC interval) without one. Force the cycle
         # every 2 min; overridable via SPARK_GRAFT_CONF.
         .config("spark.cleaner.periodicGC.interval", "2min")

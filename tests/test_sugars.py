@@ -13,7 +13,9 @@ all-hits path."""
 from __future__ import annotations
 
 import csv
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from procoggraph_spark.functions import sugars as S
@@ -23,9 +25,11 @@ from procoggraph_spark.functions import sugars as S
 WURCS_3RES = "WURCS=2.0/1,3,2/[a2122A-1a_1-5]/1-1-1/a4-b1_b4-c1"
 WURCS_1RES = "WURCS=2.0/1,1,0/[a2122h-1b_1-5]/1/"
 
+GOLDEN_PAIRS_CSV = "/root/reference/cognate_ligand_pairs.csv"
+
 
 def _golden_sugar_row():
-    with open("/root/reference/cognate_ligand_pairs.csv") as fh:
+    with open(GOLDEN_PAIRS_CSV) as fh:
         for row in csv.DictReader(fh):
             if row["sugarName"]:
                 return row
@@ -39,6 +43,10 @@ def test_wurcs_counts_parse():
     assert S.wurcs_counts(None) is None
 
 
+@pytest.mark.skipif(
+    not os.path.exists(GOLDEN_PAIRS_CSV),
+    reason=f"reference snapshot not mounted: {GOLDEN_PAIRS_CSV}",
+)
 def test_golden_sugar_chain_residue_count(spark, tmp_path):
     """The golden 1gxo sugar is a 3-residue chain (two '-(1-4)-' links
     in its name); the conversion chain must preserve that count into

@@ -113,11 +113,12 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from procoggraph_spark.operators.bpe import train_bpe
+    from procoggraph_spark.session import default_driver_memory
 
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", default_driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

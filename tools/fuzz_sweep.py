@@ -949,10 +949,12 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from procoggraph_spark.session import default_driver_memory
+
     spark = (
         SparkSession.builder.master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", default_driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
