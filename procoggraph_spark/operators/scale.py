@@ -1,10 +1,11 @@
-"""Scale operators: skew-salted joins and bucketed co-located joins
-(SURVEY §4 / M6 — the 100 TB posture made concrete).
+"""Scale operators: skew-salted aggregation and bucketed co-located
+joins (SURVEY §4 / M6 — the 100 TB posture made concrete).
 
 AQE's skew-join handles sort-merge skew at runtime; explicit salting is
 still needed when the skewed side feeds a *aggregate-then-join* or a
 UDF-cost hot key (one EC class holding half the candidate pairs in the
-PARITY stage). Bucketing removes the shuffle from repeated large-large
+PARITY stage): ``two_phase_agg`` here, ``operators.skew.salted_join``
+for joins. Bucketing removes the shuffle from repeated large-large
 joins entirely — the node/edge tables of the graph layer are written
 bucketed by their join key, so the interactive query joins (Q4-Q6
 shapes) are exchange-free.
@@ -16,36 +17,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    on: str,
-    *,
-    salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``skewed`` has hot keys: explode the small side
-    ``salt`` ways and scatter the skewed side uniformly across the
-    replicas, so one hot key occupies ``salt`` tasks instead of one.
-
-    The salt column is derived from a hash of the full row (stable, no
-    RNG) — uniform without needing a random source. Cost: the small
-    side is replicated ``salt``× (keep it the dimension side).
-
-    See ``operators.skew.salted_join`` for the portable-salt variant
-    (salt from a designated high-cardinality column via the
-    multiplicative hash — SQL-oracle-replayable) plus the
-    ``key_skew_audit`` histogram that decides when salting is needed."""
-    salted_l = skewed.withColumn(
-        "_salt", F.pmod(F.xxhash64(*skewed.columns), F.lit(salt))
-    )
-    salted_r = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    out = salted_l.join(salted_r, [on, "_salt"], how)
-    return out.drop("_salt")
 
 
 def two_phase_agg(

@@ -95,14 +95,6 @@ def salted_join(
     contract); fact side is untouched. Use when the fact's key
     histogram (``key_skew_audit``) shows a head key too hot for one
     reducer and the dim is too big to broadcast outright.
-
-    Relationship to ``operators.scale.salted_join``: that variant salts
-    from ``xxhash64`` of the full fact row — uniform with no designated
-    column, but engine-internal (a SQL oracle cannot replay it). This
-    variant needs a high-cardinality fact column but its salt is the
-    portable multiplicative hash, so results AND intermediate salts are
-    reproducible in any engine — which is what lets the registry's
-    ``j_salted_skew_join`` be oracle-checked.
     """
     allowed = {"inner", "left", "left_outer", "leftouter", "left_semi",
                "leftsemi", "left_anti", "leftanti", "semi", "anti"}

@@ -226,6 +226,25 @@ def formatted_plan(df, mode: str = "formatted") -> str:
     )
 
 
+def has_pending_checkpoint(df) -> bool:
+    """True when ``df``'s analyzed plan reads an RDD that is marked for
+    checkpointing but not yet checkpointed: a lazy ``localCheckpoint``
+    before its first action. An eager checkpoint, or a lazy one an
+    action already ran, reads False. ``RDD.checkpointData`` is
+    ``private[spark]`` in Scala but compiles to a public accessor, so
+    py4j reaches it; like :func:`formatted_plan`, this is a JVM-internal
+    touchpoint kept in one place."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() != "LogicalRDD":
+            continue
+        rdd = leaf.rdd()
+        if rdd.checkpointData().isDefined() and not rdd.isCheckpointed():
+            return True
+    return False
+
+
 def register_sql_functions(spark: SparkSession) -> None:
     """Register the engine's custom kernels as SQL functions so the
     ``spark.sql`` surface is self-contained (SURVEY §4: parity_score,

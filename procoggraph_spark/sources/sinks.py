@@ -58,10 +58,12 @@ def write_neo4j_tsv(
     label: str | None = None, gzip: bool = True,
 ) -> None:
     """S14: the bulk-import TSV (tab sep, '|' arrays, optional :LABEL
-    column with the `type|domain` multi-label convention)."""
+    column with the `type|domain` multi-label convention) under the
+    typed neo4j-admin header of :func:`neo4j_header`."""
     enc = neo4j_encode(df)
     if label:
         enc = enc.withColumn(":LABEL", F.lit(label))
+    enc = enc.toDF(*neo4j_header(df, id_col=id_col, id_space=id_space, label=label))
     writer = enc.write.mode("overwrite").option("sep", "\t").option("header", True)
     if gzip:
         writer = writer.option("compression", "gzip")

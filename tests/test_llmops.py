@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from procoggraph_spark.operators import dedup as D
 from procoggraph_spark.operators import similarity as S
 from procoggraph_spark.operators import text as X
+from procoggraph_spark.session import formatted_plan
 
 
 @pytest.fixture(scope="module")
@@ -54,9 +55,7 @@ def test_simhash_single_tokenize_and_tokenless_domain(docs):
     # filter(size(tokens) > 0) re-inlined the split into the pushed
     # filter condition, tokenizing every document twice
     fp = D.simhash(docs)
-    p = fp._sc._jvm.PythonSQLUtils.explainString(
-        fp._jdf.queryExecution(), "formatted"
-    )
+    p = formatted_plan(fp)
     assert p.count("split(trim") == 1
     # the post-agg token-count guard keeps the exploded formulation's
     # domain: whitespace-only and NULL docs produce no fingerprint,

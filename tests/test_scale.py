@@ -1,6 +1,5 @@
-"""Scale operators: salted joins and two-phase aggs must be
-result-identical to their plain twins; co-bucketed joins must plan
-without an Exchange."""
+"""Scale operators: two-phase aggs must be result-identical to their
+plain twins; co-bucketed joins must plan without an Exchange."""
 
 from __future__ import annotations
 
@@ -23,15 +22,6 @@ def skewed(spark):
         ).alias("k"),
         (F.col("id") % 97).cast("double").alias("v"),
     )
-
-
-def test_salted_join_matches_plain(spark, skewed):
-    dim = spark.createDataFrame(
-        [("HOT", 1), ("k0", 2), ("k10", 3)], "k string, attr int"
-    )
-    plain = skewed.join(dim, "k").groupBy("k", "attr").count()
-    salted = S.salted_join(skewed, dim, "k", salt=8).groupBy("k", "attr").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 def test_two_phase_agg_matches_plain(spark, skewed):
@@ -411,3 +401,36 @@ def test_mid_session_rewrite_invalidates_table_memo(spark, tmp_path):
         shutil.rmtree(
             os.path.join(_STAGE_ROOT, "bucketed", digest), ignore_errors=True
         )
+
+
+def test_plan_memo_rebuilds_pending_checkpoints(spark, tmp_path):
+    """The registry plan memo keeps a built frame unless its plan holds
+    a lazy localCheckpoint no action has run yet: that one is rebuilt
+    every call, so a repeated run recomputes instead of reading the
+    first run's blocks. Eager checkpoints and plain plans are kept."""
+    from procoggraph_spark.queries import _PLAN_MEMO, _plan_cached
+    from procoggraph_spark.session import has_pending_checkpoint
+
+    builders = {
+        "_memo_lazy": lambda s, d: s.range(8).localCheckpoint(eager=False),
+        "_memo_eager": lambda s, d: s.range(8).localCheckpoint(eager=True),
+        "_memo_plain": lambda s, d: s.range(8),
+    }
+    try:
+        got = {}
+        for name, fn in builders.items():
+            run = _plan_cached(name, fn)
+            got[name] = (run(spark, str(tmp_path)), run(spark, str(tmp_path)))
+        lazy_a, lazy_b = got["_memo_lazy"]
+        assert lazy_a is not lazy_b
+        assert got["_memo_eager"][0] is got["_memo_eager"][1]
+        assert got["_memo_plain"][0] is got["_memo_plain"][1]
+        # pins the JVM accessor the rule reads: an action materializes
+        # the lazy checkpoint, an eager one never reads as pending
+        assert has_pending_checkpoint(lazy_a)
+        assert lazy_a.count() == 8
+        assert not has_pending_checkpoint(lazy_a)
+        assert not has_pending_checkpoint(got["_memo_eager"][0])
+    finally:
+        for key in [k for k in _PLAN_MEMO if k[2] in builders]:
+            del _PLAN_MEMO[key]

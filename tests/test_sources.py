@@ -121,8 +121,10 @@ def test_neo4j_tsv_roundtrip(spark, tmp_path):
     back = (
         spark.read.option("sep", "\t").option("header", True).csv(out)
     )
-    rows = {r["uniqueID"]: r for r in back.collect()}
-    assert rows["u1"]["arr"] == "x|y"
+    assert back.columns == ["uniqueID:ID(id)", "arr:string[]", "v:float", ":LABEL"]
+    rows = {r["uniqueID:ID(id)"]: r for r in back.collect()}
+    assert rows["u1"]["arr:string[]"] == "x|y"
+    assert rows["u2"]["v:float"] == "2.0"
     assert rows["u1"][":LABEL"] == "boundEntity|domain"
 
 
