@@ -23,29 +23,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _finite_num(c: Column) -> Column:
-    """queries.common.finite_num's operator-layer twin (kept local to
-    avoid importing the query layer): NaN/±Inf and out-of-band measures
-    degrade to NULL — both engines order NaN above +Inf above every
-    real, so ONE band predicate covers all four shapes. 9.0e15 is the
-    DECIMAL(18,2)/long-cents representation intersection."""
-    return F.when((c >= F.lit(-9.0e15)) & (c <= F.lit(9.0e15)), c)
-
-
-def _valid_ts(c: Column) -> Column:
-    """queries.common.valid_ts's operator-layer twin (local for the
-    same no-query-layer-import reason as ``_finite_num``): a timestamp
-    outside the portable representation window — the intersection of
-    Arrow/pandas datetime64[ns], F.window arithmetic, and Spark
-    streaming's epoch-zero watermark admission domain, with a
-    calendar-grain-closed ceiling (see queries.common.TS_BAND_MIN/MAX;
-    the two must stay in lockstep) — is corrupted-clock data and
-    degrades to NULL like a missing event time."""
-    lo = F.lit("1970-01-01 00:00:01").cast("timestamp")
-    hi = F.lit("2262-01-01 00:00:00").cast("timestamp")
-    return F.when((c >= lo) & (c <= hi), c)
-
+from procoggraph_spark.queries.common import finite_num, valid_ts
 
 
 def _sql_str(v) -> str:
@@ -807,7 +785,7 @@ def last_touch_attribution(
             # cents long cast — degrades to NULL like a missing value
             F.sum(
                 F.round(
-                    _finite_num(F.col(value_col)) * (10 ** cents_scale), 0
+                    finite_num(F.col(value_col)) * (10 ** cents_scale), 0
                 ).cast("long")
             ).alias("_vc"),
         )
@@ -937,10 +915,10 @@ def cohort_ltv(
     # TIMESTAMP, so an out-of-band bucket would crash the client's
     # Arrow/pandas hop; same degrade-like-NULL contract as valid_ts
     orders = orders.filter(
-        _valid_ts(F.date_trunc("month", F.col(date_col))).isNotNull()
+        valid_ts(F.date_trunc("month", F.col(date_col))).isNotNull()
     )
     if cents_col is None:
-        cents_col = F.round(_finite_num(F.col("o_totalprice")) * 100).cast(
+        cents_col = F.round(finite_num(F.col("o_totalprice")) * 100).cast(
             "long"
         )
     mon = F.date_trunc("month", F.col(date_col))

@@ -1,9 +1,10 @@
 """Driver-facing query registry.
 
-Each module contributes ``QUERIES`` (name -> callable(spark, sf_dir) ->
-DataFrame) and ``ORACLES`` (name -> equivalent DuckDB SQL). The registry
-union is what ``__spark_entry__.queries()`` / ``oracle_sql()`` expose.
-Names are prefixed with the SURVEY §2 operator-family id they exercise.
+Every ``star_*`` module registers its queries with ``common.q``: name ->
+callable(spark, sf_dir) -> DataFrame, plus either the equivalent DuckDB
+SQL or the reason no portable oracle exists. The registry is what
+``__spark_entry__.queries()`` / ``oracle_sql()`` expose. Names are
+prefixed with the SURVEY §2 operator-family id they exercise.
 """
 
 from __future__ import annotations
@@ -67,88 +68,48 @@ _PROMOTE = (
 
 
 def registry():
-    from procoggraph_spark.queries import (
-        star_graph,
-        star_llmops,
-        star_llmops2,
-        star_llmops3,
-        star_llmops4,
-        star_llmops5,
-        star_llmops6,
-        star_llmops7,
-        star_llmops8,
-        star_llmops9,
-        star_multimodal,
-        star_relational,
-        star_relational2,
-        star_streaming,
-        star_temporal,
-    )
-
-    queries: dict = {}
-    oracles: dict = {}
-    # _PROMOTE alone fixes the driver window; module order orders the rest.
-    for mod in (
-        star_llmops2,
-        star_llmops3,
-        star_llmops4,
-        star_llmops5,
-        star_llmops6,
-        star_llmops7,
-        star_llmops8,
-        star_llmops9,
-        star_relational,
-        star_multimodal,
-        star_streaming,
-        star_temporal,
-        star_relational2,
-        star_graph,
-        star_llmops,
-    ):
-        queries.update(mod.QUERIES)
-        oracles.update(mod.ORACLES)
-
-    missing = [n for n in _PROMOTE if n not in queries]
-    if missing:
-        raise KeyError(
-            f"stale _PROMOTE entries (renamed/removed queries?): {missing}"
-        )
-
-    # Table-level event-time contract, oracle side: every oracle that
-    # reads the `events` view gets the band-gated shadow CTE, mirroring
-    # the valid_ts gate t() applies at the Spark-side load (see
-    # queries.common). Applied here — at the one point all oracles pass
-    # through — so a new events oracle can't forget the gate.
+    import importlib
+    import pkgutil
     import re
 
     from procoggraph_spark.queries import common
 
-    oracles = {
-        n: (
-            common.gate_events_oracle(sql)
-            if re.search(r"\bevents\b", sql)
-            else sql
+    for mod in pkgutil.iter_modules(__path__):
+        importlib.import_module(f"{__name__}.{mod.name}")
+    missing = [n for n in _PROMOTE if n not in common.REGISTRY]
+    if missing:
+        raise KeyError(
+            f"stale _PROMOTE entries (renamed/removed queries?): {missing}"
         )
-        for n, sql in oracles.items()
-    }
-    # Same pattern for the embeddings table: the dimension-coherence
-    # gate (valid_dim on the Spark load) gets its SQL twin spliced into
-    # every oracle that reads the view, so a ragged vector degrades to
-    # NULL identically on both engines (ragged-vectors fuzz leg).
-    oracles = {
-        n: (
-            common.gate_embeddings_oracle(sql)
-            if re.search(r"\bembeddings\b", sql)
-            else sql
-        )
-        for n, sql in oracles.items()
-    }
-    ordered = {n: _plan_cached(n, queries[n]) for n in _PROMOTE}
-    ordered.update(
-        (n, _plan_cached(n, fn)) for n, fn in queries.items()
-        if n not in ordered
+    # _PROMOTE fixes the driver window; the rest follow their defining
+    # module's name, in definition order within a module (a stable sort).
+    rest = sorted(
+        (n for n in common.REGISTRY if n not in _PROMOTE),
+        key=lambda n: common.REGISTRY[n][0].__module__,
     )
-    return ordered, oracles
+
+    # Table-level load contracts, oracle side: every oracle that reads
+    # the `events` view gets the band-gated shadow CTE (the valid_ts
+    # gate t() applies at the Spark-side load), and every oracle that
+    # reads `embeddings` gets the dimension-coherence CTE (valid_dim),
+    # so a ragged vector degrades to NULL identically on both engines.
+    # Applied here, where all oracles pass through, so a new oracle
+    # can't forget a gate.
+    gates = {
+        "events": common.gate_events_oracle,
+        "embeddings": common.gate_embeddings_oracle,
+    }
+    queries: dict = {}
+    oracles: dict = {}
+    for n in (*_PROMOTE, *rest):
+        fn, sql, _ = common.REGISTRY[n]
+        queries[n] = _plan_cached(n, fn)
+        if sql is not None:
+            for table, gate in gates.items():
+                if re.search(rf"\b{table}\b", sql):
+                    sql = gate(sql)
+            oracles[n] = sql
+    return queries, oracles
 
 
 # Resident-engine plan cache: serve repeated calls from one built
@@ -161,26 +122,15 @@ _PLAN_MEMO: dict = {}
 _FRESH = object()
 
 
-def _dir_signature(sf_dir):
-    import os
-
-    try:
-        with os.scandir(sf_dir) as it:
-            return tuple(sorted(
-                (e.name, e.stat().st_mtime_ns, e.stat().st_size) for e in it
-            ))
-    except OSError:
-        return None  # unknown path: still cacheable, keyed as-is
-
-
 def _plan_cached(name, fn):
     import functools
 
+    from procoggraph_spark.queries.common import _src_signature
     from procoggraph_spark.session import has_pending_checkpoint
 
     @functools.wraps(fn)
     def run(spark, sf_dir):
-        key = (id(spark), sf_dir, name, _dir_signature(sf_dir))
+        key = (id(spark), sf_dir, name, _src_signature(sf_dir))
         df = _PLAN_MEMO.get(key)
         if df is _FRESH:
             return fn(spark, sf_dir)

@@ -38,6 +38,37 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# The one query table: name -> (builder, DuckDB oracle SQL or None,
+# (why no portable oracle, what certifies the values) or None), filled
+# by ``q`` as each ``star_*`` module is imported; ``registry()`` reads it.
+REGISTRY: dict[str, tuple] = {}
+
+
+def q(
+    name: str,
+    oracle: str | None = None,
+    *,
+    rows_only: tuple[str, str] | None = None,
+):
+    """Register ``fn(spark, sf_dir) -> DataFrame`` as query ``name``.
+    Exactly one of ``oracle`` (the DuckDB SQL twin) and ``rows_only``
+    (a ``(why no engine-portable oracle can exist, which green check
+    certifies the values instead)`` pair, listed in QUERIES.md) is
+    given, and a name registers once."""
+    if (oracle is None) == (rows_only is None):
+        raise ValueError(
+            f"query {name!r}: give exactly one of oracle and rows_only"
+        )
+
+    def wrap(fn):
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} is registered twice")
+        REGISTRY[name] = (fn, oracle, rows_only)
+        return fn
+
+    return wrap
+
+
 _TABLE_MEMO: dict[tuple[int, str, str, str | None], DataFrame] = {}
 _BUCKETED: dict[int, str] = {}
 
@@ -155,15 +186,11 @@ def _bucket_count(sf_dir: str) -> int:
       ~283 ms vs ~110 ms at 8 on an 11 MB input; the work is the same,
       the scheduling floor is not).
     - Cluster (>= 1 GiB): ~256 MB per bucket (guide §6 file sizing),
-      clamped to [32, 4096]; a real deployment sets the site value via
-      ``SPARK_GRAFT_BUCKETS``, which wins outright.
+      clamped to [32, 4096].
 
     Co-bucketed joins (lineitem ⋈ orders on the orderkey) need EQUAL
     counts on both sides, so the count is a per-dataset constant —
     every table under one ``sf_dir`` buckets the same way."""
-    env = os.environ.get("SPARK_GRAFT_BUCKETS", "")
-    if env.isdigit() and int(env) > 0:
-        return int(env)
     if sf_dir in _BUCKET_COUNT_MEMO:
         return _BUCKET_COUNT_MEMO[sf_dir]
     total = 0

@@ -14,21 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from procoggraph_spark.graph.algorithms import pagerank, triangle_count
-from procoggraph_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
+from procoggraph_spark.queries.common import q, t
 
 # --- PageRank over the customer→supplier purchase graph -------------------
 # Directed edge c→s: customer c ordered from supplier s. Node ids are

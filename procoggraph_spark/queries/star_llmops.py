@@ -12,21 +12,7 @@ from pyspark.sql import functions as F
 from procoggraph_spark.operators import dedup as D
 from procoggraph_spark.operators import similarity as S
 from procoggraph_spark.operators import text as X
-from procoggraph_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
+from procoggraph_spark.queries.common import q, t
 
 # --- exact dedup (hash-groupBy; A4 + dedup family) ------------------------
 
@@ -90,7 +76,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- MinHash + LSH near-dup (oracle-less: xxhash64 is Spark-specific) -----
 
-@q("dedup_minhash_lsh")
+@q(
+    "dedup_minhash_lsh",
+    rows_only=(
+        "signatures use Spark's engine-internal xxhash64 seeds",
+        "twin `dedup_minhash_lsh_portable` (oracle, full signature+banding replay)",
+    ),
+)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures + banded LSH candidate pairs with estimated Jaccard (engine-hash-dependent: rows-only check, planted-dup pytest)."""
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
@@ -152,7 +144,13 @@ def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- SimHash near-dup (oracle-less) ---------------------------------------
 
-@q("dedup_simhash")
+@q(
+    "dedup_simhash",
+    rows_only=(
+        "64-bit simhash built from engine-internal xxhash64 bits",
+        "twin `dedup_simhash_portable` (oracle)",
+    ),
+)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs over Spark xxhash64 token hashes (the production hash; rows-only check, pytest-verified)."""
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
@@ -755,7 +753,14 @@ def dedup_cluster_canonical_jaccard(spark: SparkSession, sf_dir: str) -> DataFra
     return D.dedup_clusters(pairs, d, id_col="doc_id")
 
 
-@q("dedup_cluster_canonical")
+@q(
+    "dedup_cluster_canonical",
+    rows_only=(
+        "clusters over the xxhash64 MinHash candidate graph",
+        "twin `dedup_cluster_canonical_jaccard` (oracle) exercises the same "
+        "CC + keep-min-id canonicalization on portable candidates",
+    ),
+)
 def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dup removal: MinHash-LSH candidate pairs → connected
     components → canonical doc per cluster (oracle-less: transitive

@@ -18,21 +18,7 @@ from pyspark.sql import functions as F
 
 from procoggraph_spark.operators import dedup as D
 from procoggraph_spark.operators import text as X
-from procoggraph_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
+from procoggraph_spark.queries.common import q, t
 
 # --- context-window chunking (map-only generator; no shuffle) -------------
 
@@ -443,7 +429,13 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- learned quality classifier (fasttext-style linear, trained in-frame) --
 
-@q("text_learned_quality")
+@q(
+    "text_learned_quality",
+    rows_only=(
+        "logreg trainer state (batch-GD weights) is not SQL-replayable",
+        "pytest pins monotonic loss + gate agreement (tests/test_llmops2.py)",
+    ),
+)
 def text_learned_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learned curation scorer: distill the heuristic keep/drop gate into a logistic-regression model over hashed bag-of-words features (the fasttext-style fast classifier). Training = 30 batch-GD iterations, each ONE elementwise aggregation with only the 65 model floats crossing to the driver (the Lloyd-iteration discipline); scoring is a pure column-algebra dot product that runs at scan speed. Rows-only: the float training loop isn't SQL-replicable; pytest pins held-out agreement with the gate it distills."""
     from procoggraph_spark.operators.classifier import featurize, score, train_logreg
@@ -484,7 +476,7 @@ def _neardup_split_sql() -> str:
     """
 
 
-@q("split_leakage_safe_neardup", None)
+@q("split_leakage_safe_neardup", _neardup_split_sql())
 def split_leakage_safe_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-aware leakage-safe split: Jaccard candidate pairs → connected components → canonical per cluster → the whole CLUSTER takes the canonical's deterministic split, so even non-identical near-duplicates can never straddle train and test (the full-strength version of split_leakage_safe; oracle replays the component closure with a recursive CTE)."""
     from procoggraph_spark.operators.sampling import deterministic_split
@@ -502,12 +494,16 @@ def split_leakage_safe_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select("doc_id", "canonical_id", "split")
 
 
-ORACLES["split_leakage_safe_neardup"] = _neardup_split_sql()
-
-
 # --- BPE merge training (iterative vocab-table algorithm) -----------------
 
-@q("text_bpe_train")
+@q(
+    "text_bpe_train",
+    rows_only=(
+        "BPE merge table is iterative trainer state",
+        "exact-merge-sequence pytest vs a pure-Python reference "
+        "(tests/test_llmops2.py)",
+    ),
+)
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE merge training over the corpus (Sennrich et al. 2016): the corpus collapses once to a word-frequency table, then every merge iteration runs pair-count aggregation + argmax on the VOCAB-sized table with one (pair, count) row to the driver per merge — the third iterative-trainer shape next to k-means and the logistic classifier. Output: the learned merge table in order. Rows-only: the sequential merge loop isn't SQL-expressible; pytest pins exact merge-sequence equality with a pure-Python reference."""
     from procoggraph_spark.operators.bpe import train_bpe
@@ -520,7 +516,13 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q("text_bpe_encode")
+@q(
+    "text_bpe_encode",
+    rows_only=(
+        "encoding consumes the trained merge table above",
+        "same pytest pins round-trip decode equality",
+    ),
+)
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-BPE encoding stats: learn 12 merges on the corpus, then tokenize every document with the learned vocab via a broadcast word→symbols join (OOV words fall back to characters+end-marker) — per doc: word count, subword token count, mean subword length. The encode pass is one map-side join at scan speed; the merge loop never reruns. Rows-only: depends on the trained merges; pytest pins the encode against the reference segmentation."""
     from procoggraph_spark.operators.bpe import bpe_encode, train_bpe
@@ -532,7 +534,14 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- PQ compressed-vector ANN (ADC over 16-byte codes) --------------------
 
-@q("sim_pq_adc_topk")
+@q(
+    "sim_pq_adc_topk",
+    rows_only=(
+        "PQ codebooks are trained k-means state",
+        "recall@k pytest vs exact top-k + oracle-backed "
+        "`sim_ivf_pq_rerank` certifies the serving path",
+    ),
+)
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF+PQ's compression half: train m=16 sub-codebooks (per-subspace Lloyd, model-only driver traffic), encode every vector to 16 one-byte codes map-side, then answer top-5 neighbor queries by scanning CODES with broadcast per-query distance tables (ADC) — zero vector arithmetic on the database side, 16 bytes scanned per vector instead of 256. Rows-only: depends on the trained codebooks; pytest pins code validity, encode determinism, and recall vs exact L2. Encode rides the Arrow/GEMM twin (the column-algebra form expands to m·k interpreted folds per row — 3.3 s vs 0.9 s at 50k×64d, and interpreter-bound at 1M+); outputs verified identical across sf0.001/0.01/0.1 and the tie convention is twin-property-pinned."""
     from procoggraph_spark.operators.pq import pq_adc_topk, pq_encode_numpy, train_pq
@@ -549,7 +558,14 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_topk(codes, queries, books, top_k=5)
 
 
-@q("sim_ivf_pq_topk")
+@q(
+    "sim_ivf_pq_topk",
+    rows_only=(
+        "IVF cells + PQ codebooks are trained state",
+        "1M-vector probe recall@10 0.862 (BENCH.md) + "
+        "`sim_ivf_pq_rerank` (oracle)",
+    ),
+)
 def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed billion-scale ANN serving shape: coarse IVF cells prune candidates (broadcast equi-join on the query's n_probe nearest cells), then ADC over 16-byte PQ codes reranks only the probed share of the corpus — no raw-vector arithmetic anywhere on the database side. Index built map-only (cell argmin + m code argmins) via the Arrow/GEMM twin, the documented 1M+ path (the column-algebra builder is interpreter-bound: 1.9 s vs 0.8 s at 50k×64d); outputs verified identical across sf0.001/0.01/0.1, tie convention twin-property-pinned. Rows-only: trained models; pytest pins recall vs exact and that pruning actually skips cells."""
     from procoggraph_spark.operators.pq import ivf_pq_index_numpy, ivf_pq_topk, train_pq
@@ -568,7 +584,15 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_pq_topk(idx, queries, cents, books, n_probe=4, top_k=5)
 
 
-@q("text_compression_ratio")
+@q(
+    "text_compression_ratio",
+    rows_only=(
+        "zlib ratio has no SQL equivalent (documented Arrow-batched "
+        "Python stage)",
+        "pytest pins ratios on constructed compressible/incompressible "
+        "docs (tests/test_llmops2.py)",
+    ),
+)
 def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document zlib compression ratio — the template/boilerplate curation signal (highly compressible = repetitive). One of the repo's few legitimate Python stages: no JVM codec expression exists, so it runs Arrow-batched under mapInPandas. Rows-only: codec output isn't SQL-replicable; pytest recomputes exact values with zlib directly and pins the repetitive<random ordering."""
     d = t(spark, sf_dir, "documents")

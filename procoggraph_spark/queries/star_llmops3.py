@@ -16,21 +16,7 @@ from pyspark.sql import functions as F
 
 from procoggraph_spark.operators import dedup as D
 from procoggraph_spark.operators import text as X
-from procoggraph_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
+from procoggraph_spark.queries.common import q, t
 
 # --- asymmetric containment near-dup (quote/subset duplication) -----------
 

@@ -17,21 +17,7 @@ from procoggraph_spark.operators import layout as L
 from procoggraph_spark.operators import sampling as SP
 from procoggraph_spark.operators import similarity as S
 from procoggraph_spark.operators import text as X
-from procoggraph_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
+from procoggraph_spark.queries.common import q, t
 
 _STOP_LIST = "['the','a','an','of','and','or','to','in','is','it']"
 

@@ -20,21 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from procoggraph_spark.operators import analytics as A
-from procoggraph_spark.queries.common import cents, t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
+from procoggraph_spark.queries.common import cents, q, t
 
 # --- Cohort retention over the event stream --------------------------------
 # Weekly-cohort retention triangle: cohort = Monday-truncated week of a

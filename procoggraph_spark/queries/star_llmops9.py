@@ -20,21 +20,7 @@ from pyspark.sql import functions as F
 from procoggraph_spark.operators import analytics as A
 from procoggraph_spark.operators import features as FE
 from procoggraph_spark.operators import similarity as S
-from procoggraph_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
+from procoggraph_spark.queries.common import q, t
 
 # --- MMR diversified rerank ------------------------------------------------
 # The greedy selection is sequential by definition, but k is small and

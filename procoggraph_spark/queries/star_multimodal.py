@@ -16,21 +16,7 @@ from pyspark.sql import functions as F
 
 from procoggraph_spark.operators import multimodal as M
 from procoggraph_spark.operators import similarity as S
-from procoggraph_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
+from procoggraph_spark.queries.common import q, t
 
 def _assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → asset table with a real BinaryType payload column.

@@ -23,22 +23,9 @@ from procoggraph_spark.queries.common import (
     dec4,
     dsum2,
     dsum4,
+    q,
     t,
 )
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
 
 # --- A1/A2/F15: grouped multi-aggregate (TPC-H Q1 shape; SURVEY A1) -------
 
@@ -339,15 +326,14 @@ _BAA_SQL = {
 }
 
 for _mode in ("best", "any", "all"):
-    QUERIES[f"q6_{_mode}_mode"] = (
+    _fn = q(f"q6_{_mode}_mode", _BAA_SQL[_mode])(
         lambda spark, sf_dir, _m=_mode: _best_any_all(spark, sf_dir, _m)
     )
-    QUERIES[f"q6_{_mode}_mode"].__doc__ = (
+    _fn.__doc__ = (
         f"Q6 dashboard shape in {_mode!r} match mode (the Best/Any/All "
         "templating the reference exposes as one toggle): per-priority "
         "rollup counting best-ranked / any / all qualifying lines."
     )
-    ORACLES[f"q6_{_mode}_mode"] = _BAA_SQL[_mode]
 
 
 # --- Q7: parameterized group rollup template ------------------------------
@@ -369,20 +355,20 @@ def _group_rollup(spark: SparkSession, sf_dir: str, dim: str) -> DataFrame:
 
 
 for _dim in ("p_brand", "p_type"):
-    QUERIES[f"q7_rollup_by_{_dim}"] = (
-        lambda spark, sf_dir, _d=_dim: _group_rollup(spark, sf_dir, _d)
-    )
-    QUERIES[f"q7_rollup_by_{_dim}"].__doc__ = (
-        f"Q7 parameterized rollup template keyed by {_dim} (the "
-        "reference's 7-way dimension toggle as one template)."
-    )
-    ORACLES[f"q7_rollup_by_{_dim}"] = f"""
+    _fn = q(
+        f"q7_rollup_by_{_dim}",
+        f"""
     SELECT {_dim}, COUNT(DISTINCT l_suppkey) AS n_suppliers,
            COUNT(DISTINCT l_orderkey) AS n_orders,
            CAST(SUM(CAST((CASE WHEN l_quantity >= -9.0e15 AND l_quantity <= 9.0e15 THEN l_quantity END) AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
     FROM lineitem JOIN part ON l_partkey = p_partkey
     GROUP BY {_dim}
-    """
+    """,
+    )(lambda spark, sf_dir, _d=_dim: _group_rollup(spark, sf_dir, _d))
+    _fn.__doc__ = (
+        f"Q7 parameterized rollup template keyed by {_dim} (the "
+        "reference's 7-way dimension toggle as one template)."
+    )
 
 
 # --- Q8: "% of group with property" — two grouped counts + ratio ----------

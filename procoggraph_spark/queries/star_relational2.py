@@ -9,29 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from procoggraph_spark.queries.common import cents, dsum2, finite_num, t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
-
-# NOTE on registration order: the three blocks below (fuzzy match, U8
-# sugar chain, S13 fetch manifest) registered last historically and so
-# never fell inside the driver correctness gate's first-50 sampling
-# window; they are registered FIRST in this module (the advisor-
-# sanctioned mechanism: module-internal definition order, no post-hoc
-# list surgery) so the round-5 window rotation gives them external
-# driver verification too.
+from procoggraph_spark.queries.common import cents, dsum2, finite_num, q, t
 
 # --- fuzzy matching via edit distance --------------------------------------
 
@@ -1045,7 +1023,13 @@ def j_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # boundaries are engine-specific; verified by the planted-twin pytest in
 # tests/test_llmops.py instead) ---------------------------------------------
 
-@q("dedup_semantic_cluster")
+@q(
+    "dedup_semantic_cluster",
+    rows_only=(
+        "k-means trainer state (centroids) is iteration-order-defined",
+        "planted-duplicates pytest (tests/test_llmops2.py, 40/40 recovered)",
+    ),
+)
 def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) composition: k-means cells bound the
     candidate space, exact cosine within cells, connected components to

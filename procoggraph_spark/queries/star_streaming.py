@@ -10,22 +10,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from procoggraph_spark.functions.timeutil import epoch_seconds
-from procoggraph_spark.queries.common import finite_num, t
+from procoggraph_spark.queries.common import finite_num, q, t
 from procoggraph_spark.streaming import windows as W
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
 
 @q(
     "stream_tumbling_window",

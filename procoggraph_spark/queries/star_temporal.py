@@ -17,21 +17,7 @@ from pyspark.sql import functions as F
 
 from procoggraph_spark.functions.timeutil import epoch_seconds
 from procoggraph_spark.operators.temporal import asof_join, range_join_intervals
-from procoggraph_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def wrap(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return wrap
-
+from procoggraph_spark.queries.common import q, t
 
 _EVENTS_US = """
   SELECT event_id, make_timestamp(epoch_ns(ts) // 1000) AS ts,

@@ -130,6 +130,14 @@ def get_spark(
         builder = builder.config("spark.shuffle.compress", "false").config(
             "spark.shuffle.spill.compress", "false"
         )
+        # Python workers import from their own environment, not the
+        # driver's sys.path: put this package's parent directory on it,
+        # so operators run whatever the working directory.
+        pythonpath = os.pathsep.join(filter(None, (
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            os.environ.get("PYTHONPATH"),
+        )))
+        builder = builder.config("spark.executorEnv.PYTHONPATH", pythonpath)
     # runtime tuning without code edits: SPARK_GRAFT_CONF="k=v;k2=v2"
     # (deploy-site overrides — executor sizing, compression codec, AQE
     # advisory sizes); explicit extra_conf still wins.
@@ -197,11 +205,7 @@ def apply_adaptive_policy(
     base = int(cpus) if cpus.isdigit() else 32
     if total < interactive_bytes:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "")
-        if env.isdigit() and int(env) > 0:
-            target = int(env)  # site override wins outright
-        else:
-            target = max(4, min(base, total // (2 << 20)))
+        target = max(4, min(base, total // (2 << 20)))
         spark.conf.set("spark.sql.shuffle.partitions", str(target))
         spark.conf.unset("spark.sql.files.minPartitionNum")
         return False

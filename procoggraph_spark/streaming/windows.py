@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from procoggraph_spark.functions.timeutil import epoch_seconds
-from procoggraph_spark.queries.common import dsum2, valid_ts
+from procoggraph_spark.queries.common import TS_BAND_MIN, dsum2, valid_ts
 
 
 def _events_stream(spark, events_path: str, schema, ts_col: str = "ts"):
@@ -364,9 +364,6 @@ def streaming_enriched_counts(
     )
 
 
-_WM_FLOOR = "1970-01-01 00:00:01"
-
-
 def _wm_admissible(df: DataFrame, ts_col: str) -> DataFrame:
     """Event-time column safe for watermark ADMISSION, as ``_wm_ts``:
     Spark's initial watermark is epoch zero and
@@ -385,7 +382,7 @@ def _wm_admissible(df: DataFrame, ts_col: str) -> DataFrame:
         F.when(
             F.col(ts_col).isNotNull(),
             F.greatest(
-                F.col(ts_col), F.lit(_WM_FLOOR).cast("timestamp")
+                F.col(ts_col), F.lit(TS_BAND_MIN).cast("timestamp")
             ),
         ),
     )

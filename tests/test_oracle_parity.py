@@ -175,6 +175,20 @@ def test_driver_window_rotation():
     assert not not_oracled, f"rows-only entries in the window: {not_oracled}"
 
 
+def test_registration_rules(monkeypatch):
+    """``common.q`` registers a name once, with exactly one of an oracle
+    and a rows-only reason; the real table is restored afterwards."""
+    from procoggraph_spark.queries import common
+
+    monkeypatch.setattr(common, "REGISTRY", dict(common.REGISTRY))
+    with pytest.raises(ValueError, match="registered twice"):
+        common.q("q4_report_card", "SELECT 1")(lambda spark, sf_dir: None)
+    with pytest.raises(ValueError, match="exactly one"):
+        common.q("new_query")
+    with pytest.raises(ValueError, match="exactly one"):
+        common.q("new_query", "SELECT 1", rows_only=("why", "certified by"))
+
+
 def test_queries_md_in_sync():
     """QUERIES.md (the generated registry index the coverage audit
     reads) must be BYTE-identical to what the generator produces —

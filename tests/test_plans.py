@@ -583,9 +583,9 @@ def test_gate_sensitivity_bounded_grid_broadcasts(spark):
     assert p.count("BroadcastExchange") >= 2  # totals row + histogram
     assert "CartesianProduct" not in p
     # (exchange reuse collapses the two consumers to one physical scan
-    # under the bench session policy at sf0.1 — the captured
-    # plans/r12 artifact — but is regime-dependent, so it is not
-    # asserted here at sf0.001)
+    # under the bench session policy at sf0.1 — see
+    # `tools/plan_audit.py --capture` — but is regime-dependent, so it
+    # is not asserted here at sf0.001)
 
 
 def test_table_profile_single_pass(spark):

@@ -1,7 +1,12 @@
-"""Driver-heap default of ``get_spark``: derived from the memory the
-process may use, without starting a JVM."""
+"""Defaults of ``get_spark``: the driver heap, derived from the memory
+the process may use (no JVM), and the Python workers' import path (one
+``local[1]`` JVM in a subprocess)."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -50,3 +55,30 @@ def test_env_override_wins(host, monkeypatch):
     host(64 * GIB, str(8 * GIB))
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert session.default_driver_memory() == "3g"
+
+
+def test_local_python_workers_import_the_package(tmp_path):
+    """A driver run from another directory, with the package only on its
+    own ``sys.path``, starts Python workers that can import it."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from procoggraph_spark.session import get_spark
+
+def imports_package(batches):
+    import procoggraph_spark  # noqa: F401
+    yield from batches
+
+spark = get_spark(master="local[1]")
+print(spark.range(3).mapInPandas(imports_package, "id long").count())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    run = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.split()[-1] == "3"

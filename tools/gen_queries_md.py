@@ -26,60 +26,6 @@ onto the SURVEY §2 operator inventory.
 |---|---|---|---|
 """
 
-# Every rows-only registry entry must state WHY no portable oracle
-# exists and WHICH green check certifies its values instead (an
-# oracle-backed portable twin in the registry, or a pinned pytest).
-# gen fails on an undocumented rows-only entry, so a new one cannot
-# land silently.
-ROWS_ONLY_WHY = {
-    "dedup_minhash_lsh": (
-        "signatures use Spark's engine-internal xxhash64 seeds",
-        "twin `dedup_minhash_lsh_portable` (oracle, full signature+banding replay)",
-    ),
-    "dedup_simhash": (
-        "64-bit simhash built from engine-internal xxhash64 bits",
-        "twin `dedup_simhash_portable` (oracle)",
-    ),
-    "dedup_cluster_canonical": (
-        "clusters over the xxhash64 MinHash candidate graph",
-        "twin `dedup_cluster_canonical_jaccard` (oracle) exercises the same "
-        "CC + keep-min-id canonicalization on portable candidates",
-    ),
-    "dedup_semantic_cluster": (
-        "k-means trainer state (centroids) is iteration-order-defined",
-        "planted-duplicates pytest (tests/test_llmops2.py, 40/40 recovered)",
-    ),
-    "text_learned_quality": (
-        "logreg trainer state (batch-GD weights) is not SQL-replayable",
-        "pytest pins monotonic loss + gate agreement (tests/test_llmops2.py)",
-    ),
-    "text_bpe_train": (
-        "BPE merge table is iterative trainer state",
-        "exact-merge-sequence pytest vs a pure-Python reference "
-        "(tests/test_llmops2.py)",
-    ),
-    "text_bpe_encode": (
-        "encoding consumes the trained merge table above",
-        "same pytest pins round-trip decode equality",
-    ),
-    "sim_pq_adc_topk": (
-        "PQ codebooks are trained k-means state",
-        "recall@k pytest vs exact top-k + oracle-backed "
-        "`sim_ivf_pq_rerank` certifies the serving path",
-    ),
-    "sim_ivf_pq_topk": (
-        "IVF cells + PQ codebooks are trained state",
-        "1M-vector probe recall@10 0.862 (BENCH.md) + "
-        "`sim_ivf_pq_rerank` (oracle)",
-    ),
-    "text_compression_ratio": (
-        "zlib ratio has no SQL equivalent (documented Arrow-batched "
-        "Python stage)",
-        "pytest pins ratios on constructed compressible/incompressible "
-        "docs (tests/test_llmops2.py)",
-    ),
-}
-
 ROWS_ONLY_HEADER = """
 ## Rows-only entries — why, and what certifies them
 
@@ -107,23 +53,17 @@ def build() -> str:
     byte-for-byte, so a rotation or docstring edit cannot leave the
     committed index stale)."""
     from procoggraph_spark.queries import registry
+    from procoggraph_spark.queries.common import REGISTRY
 
     queries, oracles = registry()
     rows_only = [n for n in queries if n not in oracles]
-    undocumented = sorted(set(rows_only) - set(ROWS_ONLY_WHY))
-    stale = sorted(set(ROWS_ONLY_WHY) - set(rows_only))
-    if undocumented or stale:
-        raise SystemExit(
-            f"ROWS_ONLY_WHY out of sync: undocumented={undocumented}, "
-            f"stale={stale}"
-        )
     lines = [HEADER]
     for i, (name, fn) in enumerate(queries.items()):
         check = "oracle" if name in oracles else "rows-only"
         lines.append(f"| {i} | `{name}` | {check} | {summarize(fn)} |\n")
     lines.append(ROWS_ONLY_HEADER)
     for name in rows_only:
-        why, cert = ROWS_ONLY_WHY[name]
+        why, cert = REGISTRY[name][2]
         lines.append(f"| `{name}` | {why} | {cert} |\n")
     return "".join(lines)
 
