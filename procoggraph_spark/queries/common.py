@@ -238,7 +238,7 @@ def _bucketed_table(spark: SparkSession, path: str, key: str) -> DataFrame | Non
             return None
         buckets = _bucket_count(os.path.dirname(path.rstrip("/")))
         # bucket count is part of the layout identity: a count change
-        # (data grew, env override) must re-stage, never re-register
+        # (the data grew) must re-stage, never re-register
         # existing files under a mismatched CLUSTERED BY declaration
         digest = hashlib.sha1(f"{path}|{key}|{buckets}".encode()).hexdigest()[:12]
         tbl = f"stage_b_{digest}"
