@@ -5,8 +5,7 @@ JVM-only (no Python binding) and GraphFrames jars aren't in this
 container, so the same vertex/edge algorithms are implemented as
 DataFrame iteration — the identical Pregel-style message-passing shape
 GraphX runs, expressed as joins, which Catalyst/AQE optimizes per
-round. On a cluster with the GraphFrames jar, `to_graphframes_input`
-hands these exact frames to the library instead.
+round.
 
 Algorithms: degree statistics, hash-min connected components (Pregel
 equivalent), label propagation, k-hop neighborhood expansion, PageRank
@@ -61,6 +60,14 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Both directions of every edge as (src, dst): the symmetric
+    message graph of the undirected algorithms."""
+    return edges.select("src", "dst").union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
 def connected_components(
     edges: DataFrame, *, max_iter: int = 20
 ) -> DataFrame:
@@ -73,9 +80,7 @@ def connected_components(
     N doesn't replan rounds 1..N-1 (the standard iterative-algorithm
     discipline on Spark).
     """
-    sym = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _undirected(edges)
     comp = (
         sym.select(F.col("src").alias("id"))
         .distinct()
@@ -89,27 +94,23 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("component").alias("_nbr_min"))
         )
-        new_comp = (
+        # a vertex changes exactly when a neighbor's id undercuts its
+        # own, so the fixpoint test reads the flag, not a join against
+        # the previous state
+        comp = (
             comp.join(msgs, "id", "left")
             .select(
                 "id",
                 F.least(
                     F.col("component"), F.coalesce("_nbr_min", F.col("component"))
                 ).alias("component"),
+                (F.col("_nbr_min") < F.col("component")).alias("_changed"),
             )
+            .localCheckpoint(eager=True)
         )
-        new_comp = new_comp.localCheckpoint(eager=True)
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        comp = new_comp
-        if changed == 0:
+        if comp.filter("_changed").limit(1).count() == 0:
             break
-    return comp
+    return comp.select("id", "component")
 
 
 def label_propagation(
@@ -118,15 +119,12 @@ def label_propagation(
     """Semi-supervised label spread: seeded vertices keep their label;
     others adopt the most frequent neighbor label each round (ties →
     lexicographically smallest, deterministic). seeds: (id, label)."""
-    sym = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _undirected(edges)
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
-        .join(seeds, "id", "left")
+        .join(seeds.withColumn("_seeded", F.lit(True)), "id", "left")
     )
-    seed_ids = seeds.select("id").withColumn("_seeded", F.lit(True))
     for _ in range(max_iter):
         votes = (
             sym.join(labels.filter(F.col("label").isNotNull()), sym.src == F.col("id"))
@@ -141,16 +139,16 @@ def label_propagation(
         )
         labels = (
             labels.join(best, "id", "left")
-            .join(seed_ids, "id", "left")
             .select(
                 "id",
                 F.when(F.col("_seeded"), F.col("label"))
                 .otherwise(F.coalesce("_new", "label"))
                 .alias("label"),
+                "_seeded",
             )
+            .localCheckpoint(eager=True)
         )
-        labels = labels.localCheckpoint(eager=True)
-    return labels
+    return labels.select("id", "label")
 
 
 def pagerank(
@@ -158,37 +156,30 @@ def pagerank(
 ) -> DataFrame:
     """Fixed-iteration PageRank by power iteration (the GraphX
     staticPageRank equivalent), fully declarative — no driver-side
-    collect; the vertex count enters as a broadcast 1-row aggregate.
+    collect.
 
     Per round: rank/outdegree flows along each edge, contributions sum
     per target, `(1-d)/n + d·Σ` re-ranks. Dangling vertices keep the
     teleport term only (simplified model, standard for fixed-iteration
-    variants). Each round is one shuffle on dst; a fixed iteration count
-    keeps the plan bounded so no checkpointing is needed at small k.
+    variants). That model is linear in 1/n, so the rounds run on n·rank
+    (seed 1, teleport `1-d`) and the vertex count — a broadcast 1-row
+    aggregate over the node set — enters once, in the final division.
 
-    Plan-growth discipline (three cumulative rounds of it):
+    Plan-growth discipline:
 
-    - Each round references the previous state exactly ONCE — a second
-      reference doubles the lineage per round (2^k subtree copies;
-      measured 2-iter 2.5 s → 3-iter 5.0 s at sf0.1 before the fix).
-    - The iteration-invariant frames are materialized ONCE with a lazy
-      localCheckpoint (the repo's iterative-lineage discipline): the
-      outdegree-carrying edge list feeds every round and the node set
-      the final re-rank, so without it the edge-derivation subtree
-      (typically a join+distinct in the caller) re-executes ~2k+1
-      times per action.
-    - The per-round re-rank JOIN is algebraically folded into the next
-      round's contribution join: rank_i(v) = (1-d)/n + d·coalesce(S_i,
-      0) is a pure function of the contribution sums, so each round is
-      ONE left join of the edge list against the previous sums plus
-      one groupBy — and because the outdegree window already hash-
-      partitions+sorts the edge list on src while the previous groupBy
-      partitions the sums on id, that join plans with NO new Exchange:
-      one shuffle per iteration (the per-dst sum), the theoretical
-      minimum for power iteration. Only the FINAL round joins the node
-      set, giving contribution-less vertices their teleport rank — the
-      identical doubles per edge/group as the join-per-round form
-      (same operations, same operands).
+    - Each round references the previous state exactly once; a second
+      reference doubles the lineage per round (2^k subtree copies).
+    - The outdegree-carrying edge list feeds every round and the node
+      set, so it is materialized once with a lazy localCheckpoint;
+      otherwise the caller's edge derivation (typically a join +
+      distinct) re-executes per round.
+    - The re-rank is folded into the next round's contribution: n·rank
+      is a pure function of the previous contribution sums, so a round
+      is one left join of the edge list against them plus one groupBy.
+      The outdegree window already partitions the edge list on src and
+      the sums are partitioned on id, so the join adds no Exchange: one
+      shuffle per round. Only the final select joins the node set,
+      giving contribution-less vertices their teleport rank.
 
     Output: (id, rank). Ranks are doubles — round before hash-comparing
     across engines.
@@ -197,43 +188,23 @@ def pagerank(
     e2 = e.withColumn(
         "_outdeg", F.count("*").over(Window.partitionBy("src"))
     ).localCheckpoint(eager=False)
-    nodes = e2.select(F.col("src").alias("id")).union(
-        e2.select(F.col("dst").alias("id"))
-    ).distinct()
+    nodes = e2.select(F.explode(F.array("src", "dst")).alias("id")).distinct()
     n1 = F.broadcast(nodes.agg(F.count("*").alias("_n")))
-    nodes_n = nodes.crossJoin(n1).localCheckpoint(eager=False)
-    if iterations <= 0:
-        return nodes_n.select("id", (F.lit(1.0) / F.col("_n")).alias("rank"))
-    e3 = e2.crossJoin(n1)
-    # round 1: every vertex holds the uniform seed rank 1/n
-    contribs = (
-        e3.select(
-            F.col("dst").alias("id"),
-            ((F.lit(1.0) / F.col("_n")) / F.col("_outdeg")).alias("_c"),
-        )
-        .groupBy("id")
-        .agg(F.sum("_c").alias("_s"))
-    )
-    for _ in range(iterations - 1):
-        prev_rank = (1.0 - damping) / F.col("_n") + damping * F.coalesce(
-            "_s", F.lit(0.0)
-        )
-        contribs = (
-            e3.join(contribs, e3.src == contribs.id, "left")
-            .select(
-                F.col("dst").alias("_dst"),
-                (prev_rank / F.col("_outdeg")).alias("_c"),
+    # every vertex starts at the uniform n·rank 1
+    n_rank = F.lit(1.0)
+    sums = None
+    for _ in range(iterations):
+        out_edges = e2 if sums is None else e2.join(sums, e2.src == sums.id, "left")
+        sums = (
+            out_edges.select(
+                F.col("dst").alias("_dst"), (n_rank / F.col("_outdeg")).alias("_c")
             )
             .groupBy(F.col("_dst").alias("id"))
             .agg(F.sum("_c").alias("_s"))
         )
-    return nodes_n.join(contribs, "id", "left").select(
-        "id",
-        (
-            (1.0 - damping) / F.col("_n")
-            + damping * F.coalesce("_s", F.lit(0.0))
-        ).alias("rank"),
-    )
+        n_rank = (1.0 - damping) + damping * F.coalesce("_s", F.lit(0.0))
+    ranked = nodes if sums is None else nodes.join(sums, "id", "left")
+    return ranked.crossJoin(n1).select("id", (n_rank / F.col("_n")).alias("rank"))
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:

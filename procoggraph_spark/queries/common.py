@@ -37,6 +37,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from procoggraph_spark.session import input_bytes
+
 
 # The one query table: name -> (builder, DuckDB oracle SQL or None,
 # (why no portable oracle, what certifies the values) or None), filled
@@ -193,13 +195,7 @@ def _bucket_count(sf_dir: str) -> int:
     every table under one ``sf_dir`` buckets the same way."""
     if sf_dir in _BUCKET_COUNT_MEMO:
         return _BUCKET_COUNT_MEMO[sf_dir]
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(sf_dir):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-    except OSError:
-        total = 0
+    total = input_bytes(sf_dir) or 0
     if total >= (1 << 30):
         n = max(32, min(4096, total // (256 << 20)))
     else:

@@ -4,8 +4,9 @@ BASELINE.json "GraphX for analytics queries" north star).
 Each entry builds a graph from the TPC-H-ish tables and runs one of the
 DataFrame-native algorithms in `graph/algorithms.py`, with an exact
 DuckDB oracle: triangle counts are integers (exact across engines);
-PageRank unrolls its fixed iterations as CTEs and both engines perform
-the identical IEEE double operations, so ROUND(...,6) agrees.
+PageRank's oracle unrolls its fixed iterations as CTEs in the textbook
+1/n form while the engine iterates on n·rank, so the doubles may differ
+in the last bits and the two agree after ROUND(...,6).
 """
 
 from __future__ import annotations
@@ -19,8 +20,9 @@ from procoggraph_spark.queries.common import q, t
 # --- PageRank over the customer→supplier purchase graph -------------------
 # Directed edge c→s: customer c ordered from supplier s. Node ids are
 # prefixed ('c'/'s') so customer 5 and supplier 5 stay distinct vertices.
-# 3 power iterations, damping 0.85, both engines computing
-# (1.0 - 0.85)/n and 0.85*Σ in the same IEEE double order.
+# 3 power iterations, damping 0.85. The oracle keeps the textbook
+# (1.0 - 0.85)/n + 0.85*Σ per round as an independent check of the
+# engine's n·rank iteration; they agree after ROUND(rank, 6).
 
 _PAGERANK_SQL = """
 WITH e AS (

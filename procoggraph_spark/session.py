@@ -153,6 +153,22 @@ def get_spark(
     return spark
 
 
+def input_bytes(sf_dir: str) -> int | None:
+    """Total size of the files under ``sf_dir``, or None when it is not
+    a readable directory (``os.walk`` on a missing path yields nothing,
+    so without the check an unknown input would read as empty)."""
+    if not os.path.isdir(sf_dir):
+        return None
+    total = 0
+    try:
+        for root, _dirs, files in os.walk(sf_dir):
+            for f in files:
+                total += os.path.getsize(os.path.join(root, f))
+    except OSError:
+        return None
+    return total
+
+
 def apply_adaptive_policy(
     spark: SparkSession,
     sf_dir: str,
@@ -189,18 +205,11 @@ def apply_adaptive_policy(
        scheduling overhead.
 
     Returns the resulting AQE state."""
-    total = 0
-    try:
-        if not os.path.isdir(sf_dir):
-            # os.walk on a missing path yields NOTHING rather than
-            # raising — without this check an unknown input would fall
-            # into the interactive regime and throttle a real run
-            total = threshold_bytes
-        for root, _dirs, files in os.walk(sf_dir):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-    except OSError:
-        total = threshold_bytes  # unknown input: assume cluster regime
+    total = input_bytes(sf_dir)
+    if total is None:
+        # unknown input: assume the cluster regime rather than throttle
+        # a real run as interactive
+        total = threshold_bytes
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     base = int(cpus) if cpus.isdigit() else 32
     if total < interactive_bytes:

@@ -85,13 +85,16 @@ def test_pagerank_star_graph(spark):
 
 
 def test_pagerank_dangling_teleport_only(spark):
-    """b has no out-edges; c gets only the teleport term."""
+    """b has no out-edges; c gets only the teleport term. With no
+    iterations every vertex keeps the uniform seed 1/n."""
     from procoggraph_spark.graph.algorithms import pagerank
 
     e = spark.createDataFrame([("a", "b"), ("c", "a")], "src string, dst string")
     r = {row["id"]: row["rank"] for row in pagerank(e, iterations=3).collect()}
     assert r["c"] == pytest.approx((1 - 0.85) / 3)
     assert r["b"] > r["c"]
+    r0 = {row["id"]: row["rank"] for row in pagerank(e, iterations=0).collect()}
+    assert r0 == {"a": 1 / 3, "b": 1 / 3, "c": 1 / 3}
 
 
 def test_triangle_count_golden(spark):

@@ -6,6 +6,8 @@ results stay correct."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from procoggraph_spark.queries import registry
@@ -515,10 +517,27 @@ def test_target_encode_single_scan_broadcast_global(spark):
     df = QUERIES["feat_target_encode"](spark, SF_ORACLE)
     p = plan(spark, df)
     assert "Scan parquet" not in p  # the one scan sits in the checkpoint
+    # ...and both consumers read that ONE checkpoint: every RDD scan
+    # names the same RDD, so two independent scan-then-checkpoint
+    # subplans cannot pass
+    scans = re.findall(r"^\(\d+\) Scan ExistingRDD$", p, re.M)
+    rdds = re.findall(r"(MapPartitionsRDD\[\d+\]) at localCheckpoint", p)
+    assert len(scans) >= 2 and len(rdds) == len(scans), p
+    assert len(set(rdds)) == 1, rdds
     assert "Window" not in p  # no single-partition pass over categories
     assert "BroadcastExchange" in p  # 1-row global attached by broadcast
     assert "CartesianProduct" not in p
     assert "BatchEvalPython" not in p and "PythonUDF" not in p
+
+
+def test_pagerank_vertex_count_broadcast_once(spark):
+    """graph_pagerank runs its rounds on n·rank, so the 1-row vertex
+    count is broadcast once and crosses the ranks once, in the final
+    division — not once per round."""
+    df = QUERIES["graph_pagerank"](spark, SF_ORACLE)
+    p = plan(spark, df, mode="simple")
+    assert p.count("BroadcastNestedLoopJoin") == 1, p
+    assert p.count("BroadcastExchange") == 1, p
 
 
 def test_robust_scale_bounds_broadcast_back(spark):

@@ -195,6 +195,30 @@ def test_adaptive_policy_regimes(spark, tmp_path):
         spark.conf.unset("spark.sql.files.minPartitionNum")
 
 
+def test_bucket_count_from_input_bytes(tmp_path):
+    """``session.input_bytes`` is the one size measurement both the
+    adaptive policy and the bucket count read: None for a missing
+    directory, which the bucket count takes as empty (8 buckets) while
+    the policy takes it as cluster scale (pinned above)."""
+    from procoggraph_spark.queries.common import _bucket_count
+    from procoggraph_spark.session import input_bytes
+
+    def make_dir(name, n_bytes):
+        d = tmp_path / name
+        d.mkdir()
+        with open(d / "data.parquet", "wb") as f:
+            f.truncate(n_bytes)  # sparse: only the size is read
+        return str(d)
+
+    missing = str(tmp_path / "nope")
+    assert input_bytes(missing) is None
+    assert input_bytes(make_dir("mb40", 40 << 20)) == 40 << 20
+    assert _bucket_count(missing) == 8
+    assert _bucket_count(str(tmp_path / "mb40")) == 20  # ~2 MB per bucket
+    assert _bucket_count(make_dir("gb2", 2 << 30)) == 32  # cluster floor
+    assert _bucket_count(make_dir("gb16", 16 << 30)) == 64  # 256 MB each
+
+
 def test_leakage_split_survives_viral_dup_group(spark):
     """One document copied 50k times (the viral boilerplate case) must
     not break leakage_safe_split: the groupBy+join-back shape partially
